@@ -12,7 +12,7 @@ from __future__ import annotations
 import os
 import time
 
-from common import dir_stats, median, quartiles
+from common import dir_stats, few_median, median
 
 # as-of cutoffs, as fractions of the input's event-time span
 CUTOFF_FRACTIONS = (0.5, 1.0)
@@ -92,16 +92,14 @@ def write_asof(spark, store: str, cutoffs: list[int], out: str) -> None:
         )
 
 
-def asof_read_s(spark, store: str, cutoffs: list[int],
-                rounds: int) -> tuple[float, list[float]]:
+def asof_read_s(spark, store: str, cutoffs: list[int], rounds: int) -> float:
     """Median over ``rounds`` rounds of the mean ``asof_snapshot`` time
-    over the cutoffs (a read's cost follows its cutoff); also returns
-    every round's mean."""
+    over the cutoffs (a read's cost follows its cutoff)."""
     means = []
     for _ in range(rounds):
         t = [asof_once(spark, store, c) for c in cutoffs]
         means.append(sum(t) / len(t))
-    return median(means), means
+    return few_median("asof_read_s", means)
 
 
 # ------------------------------------------------------------ traced run
@@ -149,8 +147,10 @@ def layer_breakdown(bench, src: str, reps: int) -> dict:
 
     A layer's self time is the difference between consecutive
     cumulative prefix materialisations of one repetition, reported as
-    the median over ``reps`` repetitions with its quartiles; jobs,
-    stages, tasks and shuffle bytes come from each span's job group."""
+    the median over ``reps`` repetitions with its minimum and maximum;
+    jobs, stages, tasks and shuffle bytes come from each span's job
+    group. ``binlog.rows`` counts the rows the decode prefix yields, in
+    one more materialisation outside every span."""
     from replicator_spark.sinks.timemachine import write_timemachine
 
     spark, tr = bench.spark, bench.tracer
@@ -170,12 +170,11 @@ def layer_breakdown(bench, src: str, reps: int) -> dict:
         cum["write"].append(sp["end"] - sp["start"])
         last["write"] = sp
 
-    out = {}
+    out = {"binlog.rows": frames[0][1].count()}
 
     def put(key: str, xs: list[float]) -> None:
-        q1, q3 = quartiles(xs) if len(xs) > 1 else (xs[0], xs[0])
-        out[key] = median(xs)
-        out[key + "_q1"], out[key + "_q3"] = q1, q3
+        out[key] = few_median(key, xs)
+        out[key + "_min"], out[key + "_max"] = min(xs), max(xs)
 
     put("binlog.decode_s", cum["binlog"])
     out["binlog.decode_tasks"] = last["binlog"]["tasks"]
@@ -200,21 +199,19 @@ def layer_breakdown(bench, src: str, reps: int) -> dict:
     return out
 
 
-def traced_asof(bench, store: str, cutoffs: list[int], reps: int = 1) -> dict:
-    """asof.self_s (median read time over every cutoff and repetition)
-    and the median stages and shuffle bytes of a read."""
+def traced_asof(bench, store: str, cutoffs: list[int]) -> dict:
+    """asof.self_s (median read time over one read per cutoff), and the
+    stages and shuffle bytes of the read at the last cutoff."""
     from replicator_spark.sinks.timemachine import asof_snapshot
 
     spark, tr = bench.spark, bench.tracer
-    times, spans = [], []
-    for _ in range(reps):
-        for c in cutoffs:
-            with tr.span("sinks.timemachine.asof_snapshot") as sp:
-                noop(asof_snapshot(spark.read.parquet(store), c))
-            times.append(sp["end"] - sp["start"])
-            spans.append(sp)
+    times = []
+    for c in cutoffs:
+        with tr.span("sinks.timemachine.asof_snapshot") as sp:
+            noop(asof_snapshot(spark.read.parquet(store), c))
+        times.append(sp["end"] - sp["start"])
     return {
-        "asof.self_s": median(times),
-        "asof.stages": median([s["stages"] for s in spans]),
-        "asof.shuffle_bytes": median([s["shuffle_bytes"] for s in spans]),
+        "asof.self_s": few_median("asof.self_s", times),
+        "asof.stages": sp["stages"],
+        "asof.shuffle_bytes": sp["shuffle_bytes"],
     }

@@ -46,12 +46,10 @@ class Oracle:
     def close(self) -> None:
         self.con.close()
 
-    def n_cells(self) -> int:
-        return self.con.execute("SELECT count(*) FROM oracle_cells").fetchone()[0]
-
     def n_rows(self, parquet_dir: str) -> int:
+        """Rows of the parquet files under ``parquet_dir``, at any depth."""
         return self.con.execute(
-            f"SELECT count(*) FROM read_parquet('{parquet_dir}/*.parquet')"
+            f"SELECT count(*) FROM read_parquet('{parquet_dir}/**/*.parquet')"
         ).fetchone()[0]
 
     def _fingerprint(self, rel: str, cols) -> tuple:

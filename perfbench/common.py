@@ -117,11 +117,6 @@ def median(xs) -> float:
     return statistics.median(xs)
 
 
-def quartiles(xs) -> tuple[float, float]:
-    q = statistics.quantiles(xs, n=4)
-    return q[0], q[2]
-
-
 def pctl(xs, q: float) -> float:
     """Linear-interpolated percentile ``q`` in [0, 100]."""
     s = sorted(xs)
@@ -145,6 +140,15 @@ def reported_pctl(name: str, xs, q: float, min_beyond: int = 10) -> float:
     print(line, flush=True)
     if beyond < min_beyond:
         raise SampleRuleError(f"{line}: fewer than {min_beyond} beyond")
+    return v
+
+
+def few_median(name: str, xs) -> float:
+    """Median of a few costly repetitions, too few for the sample rule,
+    so it is printed as what it is: with its count, minimum and maximum."""
+    v = median(xs)
+    print(f"{name} = {v:.6g} (median of only n={len(xs)}, "
+          f"min {min(xs):.6g}, max {max(xs):.6g})", flush=True)
     return v
 
 

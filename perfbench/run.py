@@ -55,7 +55,8 @@ STREAM_SIDE_S = 10  # measured stream window when the stream is the side phase
 WARM_EVENTS = 100_000
 MIN_PASSES = 3  # timed passes when the batch is the timed phase
 BATCH_SIDE_PASSES = 3  # timed passes when the batch is the side phase
-ASOF_ROUNDS = 2
+TRACE_PAIRS = 2  # traced: at least this many (traced, untraced) pass pairs
+ASOF_ROUNDS = 3  # the median of 3 rejects one slow round
 TRACE_REPS = 3  # repetitions of the traced prefix materialisations
 # traced runs: per-batch stream medians need 10 batches beyond them
 TRACE_MIN_BATCHES = 21
@@ -94,9 +95,6 @@ def stream_phase(bench, files: list[str], seconds: float) -> dict:
     bench.log(f"stream: {len(run['names'])} files, {len(run['commits'])} epochs")
     if bench.trace:
         out.update(stream.stream_layer(run, first))
-        out["tm_write.files_per_batch"] = common.median(
-            [common.dir_stats(os.path.join(run["out"], f"epoch={e}"))[0]
-             for e in run["commits"]])
     return out
 
 
@@ -106,16 +104,25 @@ def batch_phase(bench, src: str, n_events: int, seconds: float | None,
     replicated, then timed passes into fresh stores, for ``seconds`` (at
     least ``MIN_PASSES``) or ``passes``. The rate of a pass is its events
     over its wall time; the phase reports the median. Traced, the timed
-    passes alternate between tracing on and off."""
+    passes alternate between tracing on and off, in at least
+    ``TRACE_PAIRS`` whole pairs, and ``trace.overhead_s`` is the median
+    over pairs of the traced pass's time minus the untraced one's."""
     for _ in range(-(-WARM_EVENTS // n_events)):
         batch.backfill_pass(bench.spark, src, bench.path("store-discard"))
     tr = bench.tracer
     rates, plan_s, stores = [], [], []
-    timed = {True: [], False: []}
-    spans = []
+    times, spans = [], []
     t_end = time.perf_counter() + (seconds or 0)
     k = 0
-    while (k < passes) if passes else (k < MIN_PASSES or time.perf_counter() < t_end):
+
+    def more() -> bool:
+        if bench.trace and (k < 2 * TRACE_PAIRS or k % 2):
+            return True
+        if passes:
+            return k < passes
+        return k < MIN_PASSES or time.perf_counter() < t_end
+
+    while more():
         store = bench.path(f"store-{k}")
         traced = bench.trace and k % 2 == 0
         tr.enabled = traced
@@ -124,20 +131,20 @@ def batch_phase(bench, src: str, n_events: int, seconds: float | None,
         tr.enabled = bench.trace
         if traced:
             spans.append(sp)
-        timed[traced].append(total)
+        times.append(total)
         rates.append(n_events / total)
         plan_s.append(p)
         stores.append(store)
         k += 1
     bench.log(f"batch: {k} passes, rates {[round(r) for r in rates]}")
-    out = {"stores": stores,
-           "backfill_events_per_s": common.median(rates)}
+    out = {"stores": stores, "backfill_events_per_s": common.few_median(
+        "backfill_events_per_s", rates)}
     if bench.trace:
-        out["runner.plan_s"] = common.median(plan_s)
-        out["trace.overhead_s"] = (common.median(timed[True])
-                                   - common.median(timed[False]))
+        out["runner.plan_s"] = common.few_median("runner.plan_s", plan_s)
+        out["trace.overhead_s"] = common.few_median(
+            "trace.overhead_s", [a - b for a, b in zip(times[::2], times[1::2])])
         for key in ("jobs", "stages", "tasks"):
-            out[f"backfill.{key}"] = common.median([s[key] for s in spans])
+            out[f"backfill.{key}"] = spans[0][key]
     return out
 
 
@@ -190,7 +197,6 @@ def run(bench) -> dict:
         stores.append(bench.path("store-prefix"))
         m["binlog.bytes_in"] = sum(
             os.path.getsize(os.path.join(b_src, f)) for f in os.listdir(b_src))
-        m["binlog.rows"] = b_events
 
     st = stream_phase(bench, files, stream_s)
     s_run = st.pop("run")
@@ -215,9 +221,8 @@ def run(bench) -> dict:
         m.update(batch.traced_asof(bench, asof_store, cutoffs))
         m.update(mem.stop())
     else:
-        m["asof_read_s"], means = batch.asof_read_s(
+        m["asof_read_s"] = batch.asof_read_s(
             bench.spark, asof_store, cutoffs, ASOF_ROUNDS)
-        bench.log(f"as-of reads: round means {[round(x, 3) for x in means]}")
     bench.stop()
 
     # ---- checks, outside every timed region
@@ -241,8 +246,12 @@ def run(bench) -> dict:
             ok, msg = a_oracle.asof_matches(bench.path("asof", f"asof-{i}"), c)
             bench.check(f"as-of {i}: " + msg, ok)
         if bench.trace:
-            m["cells.per_event"] = oracle(b_set, b_events).n_cells() / b_events
-            m["asof.rows_in_per_row_out"] = a_oracle.n_cells() / a_oracle.n_rows(
+            # counted in the program's outputs: the breakdown's store,
+            # and the store read against its full-span as-of read
+            m["cells.per_event"] = a_oracle.n_rows(
+                bench.path("store-prefix")) / b_events
+            m["asof.rows_in_per_row_out"] = a_oracle.n_rows(
+                asof_store) / a_oracle.n_rows(
                 bench.path("asof", f"asof-{len(cutoffs) - 1}"))
     finally:
         for o in oracles.values():

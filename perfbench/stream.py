@@ -27,6 +27,7 @@ import time
 from datetime import datetime
 
 LEAD_S = 0.5  # the generator's first file is due this long after start
+DRAIN_S = 30.0  # after the last file, wait at most this long for its commit
 
 
 def place_files(plan_path: str) -> None:
@@ -120,12 +121,11 @@ def _batches_since(progress, t: float) -> int:
 
 
 def run_open_loop(bench, files: list[str], period: float, first: int,
-                  n_base: int, min_batches: int = 0,
-                  drain_s: float = 30.0) -> dict:
+                  n_base: int, min_batches: int = 0) -> dict:
     """Start the stream and place staged ``files`` one every ``period``
     seconds: the first ``n_base``, and past them, while fewer than
     ``min_batches`` batches began after file ``first`` was due, the
-    rest. Then wait until every placed file is committed or ``drain_s``
+    rest. Then wait until every placed file is committed or ``DRAIN_S``
     passed, and stop the stream. Returns the per-file and per-epoch
     bookkeeping of the placed files."""
     watch, out, ckpt = (bench.path("stream", d) for d in ("watch", "out", "ckpt"))
@@ -157,7 +157,7 @@ def run_open_loop(bench, files: list[str], period: float, first: int,
     with open(plan["placed"]) as fh:
         placed = json.load(fh)
     names = [os.path.basename(f) for f in files[:len(placed)]]
-    deadline = time.time() + drain_s
+    deadline = time.time() + DRAIN_S
     error = None
     while True:
         if q.exception() is not None:
@@ -223,8 +223,9 @@ def _ts(s: str) -> float:
 
 def stream_layer(run: dict, first: int) -> dict:
     """Per-layer metrics of one stream run over the batches that took
-    files from index ``first`` on (traced runs only)."""
-    from common import median, reported_pctl
+    files from index ``first`` on (traced runs only). Every per-batch
+    figure is a median under the sample rule."""
+    from common import dir_stats, reported_pctl
 
     measured = set(run["names"][first:])
     epochs = {e for n, e in run["file_epoch"].items() if n in measured}
@@ -258,9 +259,12 @@ def stream_layer(run: dict, first: int) -> dict:
             ("queue_wait_s", waits),
         )
     }
+    out["stream.jobs_per_batch"] = reported_pctl("stream.jobs_per_batch", jobs, 50)
+    out["tm_write.files_per_batch"] = reported_pctl(
+        "tm_write.files_per_batch",
+        [dir_stats(os.path.join(run["out"], f"epoch={e}"))[0] for e in epochs], 50)
     out.update({
         "stream.batches": len(prog),
-        "stream.jobs_per_batch": median(jobs),
         "stream.busy_frac": sum(dur["triggerExecution"]) / 1000.0
         / (t_last - t_first),
     })
